@@ -67,14 +67,17 @@ LAST_SINK_NAME: str | None = None
 _STREAM_ROWS_PER_PARTITION = 25_000
 _STREAM_PARTS_HINT: int | None = None
 
-#: Target events per micro-batch for drains whose RESULT is provably
-#: trigger-count-independent (r14, guide §2.2 "fewer, larger"): the
-#: applyInPandasWithState surface pays a per-KEY state roundtrip every
-#: batch a key appears in (~5 ms/key measured at sf0.1 — the r14
-#: breakdown put ~8 s of allUpdatesTimeMs on a 1500-key batch even at
-#: ZERO input rows), so with every user active in every day-file,
-#: trigger count multiplies the whole per-key cost. 100 k events per
-#: trigger amortizes that floor while keeping in-flight state bounded:
+#: Target events per micro-batch for the three drains whose RESULT is
+#: provably trigger-count-independent (stream_stateful_timers,
+#: stream_session_watermarked, stream_dedup; guide §2.2 "fewer,
+#: larger"). Every trigger pays a fixed planning/WAL/offset/state-commit
+#: floor, and the applyInPandasWithState surface also pays a per-KEY
+#: state roundtrip every batch a key appears in (~5 ms/key measured
+#: at sf0.1 — the r14 breakdown put ~8 s of allUpdatesTimeMs on a
+#: 1500-key batch even at ZERO input rows), so with every user active
+#: in every day-file, trigger count multiplies the whole per-key cost.
+#: 100 k events per trigger amortize those floors while keeping
+#: in-flight state bounded:
 #: eviction (watermark/timers) happens at batch boundaries, so a
 #: trigger's time-horizon is what bounds un-evicted state — at the
 #: smoke's 100× corpus this derives ~31 files (≈1 replica span) per
@@ -88,10 +91,13 @@ def derived_mfpt(spark: SparkSession, sf_dir: str) -> int:
     """maxFilesPerTrigger derived from the replay's shape so one
     micro-batch carries ~``_STREAM_ROWS_PER_TRIGGER`` events (see
     above). ONLY for ops whose emitted result is invariant under
-    trigger boundaries (append-mode emissions gated on the final
-    watermark, or update-mode emissions folded with a monotone
-    aggregate): per-batch-emission contracts (stream_progress_audit,
-    the per-batch drains) keep their pinned cadence."""
+    trigger boundaries — today stream_stateful_timers,
+    stream_session_watermarked (append-mode emissions gated on the
+    final watermark) and stream_dedup (a watermark that never marks a
+    later day file late; see its docstring). Per-batch-emission
+    contracts (stream_progress_audit, the per-batch drains) keep their
+    pinned cadence. tests/test_streaming.py checks all three against
+    the oracle at mfpt=1 and at the derived cadence."""
     env = os.environ.get("SPARK_GRAFT_STREAM_MFPT")
     if env:
         return max(1, int(env))
@@ -594,17 +600,29 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     are excluded on both sides (null-ts doctrine: a row without an
     event time has no position against the watermark — the oracle's
     epoch-floor predicate already rejects NULL via three-valued
-    logic)."""
-    s = read_stream(spark, sf_dir, maxFilesPerTrigger=10).where(
-        F.col("ts").isNotNull()
-    )
+    logic).
+
+    Trigger cadence is DERIVED (see ``derived_mfpt``): the emitted set
+    does not depend on where triggers fall. The replay is one file per
+    UTC day in day order and a trigger takes whole files, so both
+    copies of a row, and every row sharing its key (the key carries
+    ts, hence its day), arrive in the same micro-batch. The watermark
+    trails the max event time of EARLIER batches by 2 h, so it never
+    reaches the start of a later day file and no row is ever late;
+    and since the watermark is monotone from the epoch, pre-1970 rows
+    drop under any cadence — the oracle's epoch floor. Only
+    ``event_type`` is drained: it is the one column the result
+    reads."""
+    s = read_stream(
+        spark, sf_dir, maxFilesPerTrigger=derived_mfpt(spark, sf_dir)
+    ).where(F.col("ts").isNotNull())
     doubled = s.withColumn("copy", F.explode(F.array(F.lit(0), F.lit(1)))).drop(
         "copy"
     )
     deduped = doubled.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id", "ts", "event_type"]
     )
-    collected = drain(deduped.select("event_id", "event_type"), "append")
+    collected = drain(deduped.select("event_type"), "append")
     return collected.groupBy("event_type").agg(
         F.count("*").alias("n_unique")
     )

@@ -676,8 +676,12 @@ def stream_state_section(spark) -> dict:
 
     - stream_dedup is WATERMARKED: state holds one trigger's ingest
       plus the 2h horizon tail, so max state rows must stay ~FLAT from
-      base to 100× while input rows grow 100× (measured: 33.9 k at
-      every scale against 20 M doubled input rows at 100×).
+      base to 100× while input rows grow 100×. On the derived cadence
+      (~100 k events per trigger, see derived_mfpt) the base replay is
+      one data trigger: 100 000 max state rows at sf0.1, which the 100×
+      legs' ~30-file triggers should match. The 33.9 k measured at
+      every scale against 20 M doubled input rows at 100× is the old
+      maxFilesPerTrigger=10 figure.
     - stream_bitmap_distinct runs a complete-mode aggregate: state is
       one bitmap per (window, id-bucket) KEY — final state rows must
       track the window count (≈1.04 buckets/window here) and NEVER the

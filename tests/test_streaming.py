@@ -683,3 +683,39 @@ def test_fold_correct_when_key_spans_arrow_chunks(spark, duck, sf_dir):
         for r in duck.execute(ORACLES["stream_stateful_timers"]).fetchall()
     )
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["stream_dedup", "stream_stateful_timers", "stream_session_watermarked"],
+)
+def test_derived_cadence_drains_match_oracle_at_any_trigger_count(
+    spark, duck, sf_dir, op
+):
+    """The three drains on ``derived_mfpt`` claim a result independent
+    of trigger boundaries. Replay each one file per trigger
+    (SPARK_GRAFT_STREAM_MFPT=1) and at the derived cadence: both runs
+    must equal the DuckDB oracle, and the trigger counts must differ,
+    so the multi-trigger path is really taken."""
+    from pymapreduce_spark.registry import ORACLES
+    from pymapreduce_spark.streaming import core
+    from pymapreduce_spark.testing import compare_frames
+
+    key = "SPARK_GRAFT_STREAM_MFPT"
+    old = os.environ.pop(key, None)
+    triggers = {}
+    try:
+        for mfpt in ("1", None):
+            if mfpt:
+                os.environ[key] = mfpt
+            else:
+                del os.environ[key]
+            got = QUERIES[op](spark, sf_dir)
+            triggers[mfpt] = len(core.LAST_QUERY_PROGRESS)
+            compare_frames(f"{op}@mfpt={mfpt}", got, duck, ORACLES[op])
+    finally:
+        if old is None:
+            os.environ.pop(key, None)
+        else:
+            os.environ[key] = old
+    assert triggers["1"] > triggers[None] >= 1, triggers
